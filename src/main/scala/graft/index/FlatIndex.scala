@@ -60,67 +60,20 @@ object FlatIndex {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
-  /** Batch kNN via a blocked mapPartitions kernel: the corpus partition
-    * streams once through a primitive-array loop holding a bounded
-    * (dist, id)-ordered buffer per query — the n·q candidate rows are
-    * never materialized, and the final top-k merge sees at most
-    * k·partitions rows per query. This is the BLAS-style kernel every
-    * batch brute-force scan wants; results are identical to [[knn]]
-    * (same rank-key arithmetic, same tie-break). Queries must fit in a
-    * broadcast (they are the small side by construction). */
-  def knnBlocked(corpus: DataFrame, queries: DataFrame, k: Int, metric: Metric): DataFrame = {
-    if (k <= 0) return knn(corpus, queries, k, metric) // clamp-to-all path
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    val bc = spark.sparkContext.broadcast((qids, qvecs))
-    val partials = corpus.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Double])] // primitive decode — no per-element boxing
-      .mapPartitions { it =>
-        // Pack the partition ONCE into a flat primitive block (the
-        // ServeBlock layout), then scan QUERY-OUTER: one resident heap
-        // and one contiguous row walk per query. The r5 rows-outer loop
-        // touched all nq heaps per row — ~nq scattered cache lines per
-        // row, a working set that thrashed the shared LLC once 32 tasks
-        // ran it (VERDICT r12 wrong #1: the quantized-family QPS rows
-        // read FASTER at 8 cores than 32; measured: the same scan cost
-        // 5× the task-CPU at 32 threads). Heap CONTENTS are insertion-
-        // order independent (k smallest by total (dist, id) order), so
-        // the transposed loop emits bit-identical partials.
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
-        var dim = -1
-        while (it.hasNext) {
-          val (id, v) = it.next()
-          idsB += id
-          if (dim < 0) dim = v.length
-          require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
-          dataB ++= v
-        }
-        val ids = idsB.result()
-        val data = dataB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val (qidArr, qs) = bc.value
-          qs.indices.iterator.flatMap { qi =>
-            val q = qs(qi)
-            val h = new BoundedTopK(k)
-            var r = 0
-            while (r < n) {
-              h.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
-              r += 1
-            }
-            val qid = qidArr(qi)
-            (0 until h.size).iterator.map(s => (qid, h.ids(s), h.dists(s)))
-          }
-        }
-      }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    topK(partials, k, metric)
-  }
+  /** Batch kNN via the blocked batch driver ([[BlockedScan]] over
+    * [[FlatScan]]): each corpus partition packs once into a flat primitive
+    * block and streams through the scan with one bounded (dist, id) heap
+    * per query — the n·q candidate rows are never materialized, and the
+    * final top-k merge sees at most k·partitions rows per query. Results
+    * are identical to [[knn]] (same rank-key arithmetic, same tie-break).
+    * Queries must fit in a broadcast (they are the small side by
+    * construction). */
+  def knnBlocked(corpus: DataFrame, queries: DataFrame, k: Int, metric: Metric): DataFrame =
+    if (k <= 0) knn(corpus, queries, k, metric) // clamp-to-all path
+    else {
+      val rows = Layouts.Vectors.rows(corpus)
+      BlockedScan.search(new FlatScan(metric, Layout.width(rows)), rows, queries, k)
+    }
 
   /** Per-query top-k over a (query_id, neighbor_id, rank_key) frame.
     * k ≤ 0 clamps to "all rows, ranked" (flat.go:82-84 clamp-to-n

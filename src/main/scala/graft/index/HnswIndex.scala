@@ -212,7 +212,7 @@ object HnswIndex {
     val spark = vectors.sparkSession
     import spark.implicits._
     // packed parallel collect: each task decodes ITS partition's rows to
-    // flat primitive arrays (the ServeBlock discipline), so the driver
+    // flat primitive arrays (the serving-block discipline), so the driver
     // receives a few big arrays instead of row-decoding n Seqs on one
     // thread — at 100k the single-threaded Dataset.collect() cost more
     // than the whole concurrent insert pass
@@ -382,9 +382,7 @@ object HnswIndex {
       return FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, metric)
     val spark = graph.sparkSession
     import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
+    val (qids, qvecs) = BlockedScan.collectQueries(queries)
     val bc = spark.sparkContext.broadcast((qids, qvecs))
     val ef = math.max(efSearch, k)
     val nShards =

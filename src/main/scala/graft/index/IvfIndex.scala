@@ -25,6 +25,11 @@ import graft.core.Metric
   */
 final case class IvfModel(centroids: Seq[Seq[Double]], metric: Metric) {
   def nlist: Int = centroids.size
+  def dim: Int = centroids.head.size
+  /** Primitive copy for the scan kernels' probe ranking — memoized, so a
+    * kernel built per call converts nothing. */
+  @transient private[graft] lazy val centroidArrays: Array[Array[Double]] =
+    centroids.map(_.toArray).toArray
 }
 
 object IvfIndex {
@@ -71,137 +76,30 @@ object IvfIndex {
   /** Search the assigned table (`cluster_id` column present) — the fully
     * distributed plan (queries can themselves be a huge table). The
     * bounded aggregator combines map-side, so the shuffle carries at most
-    * k·partitions rows per query, not the full probed candidate set. */
+    * k·partitions rows per query, not the full probed candidate set.
+    * k ≤ 0 clamps to "all probed rows" (flat.go:82-84 clamp semantics). */
   def search(assigned: DataFrame, model: IvfModel, queries: DataFrame,
       k: Int, nprobe: Int): DataFrame = {
-    if (k <= 0) return searchAll(assigned, model, queries, nprobe)
-    val p = probes(queries, model, nprobe)
-    val candidates = assigned.join(broadcast(p), Seq("cluster_id"))
+    val candidates = assigned.join(broadcast(probes(queries, model, nprobe)), Seq("cluster_id"))
       .select(
         col("query_id"),
         col("id").as("neighbor_id"),
         model.metric.rankKey(col("qvec"), col("vec")).as("rank_key"))
-    FlatIndex.topKAgg(candidates, k, model.metric)
+    if (k <= 0) FlatIndex.topK(candidates, 0, model.metric)
+    else FlatIndex.topKAgg(candidates, k, model.metric)
   }
 
-  /** k ≤ 0 clamps to "all probed rows" (flat.go:82-84 clamp semantics). */
-  private def searchAll(assigned: DataFrame, model: IvfModel, queries: DataFrame,
-      nprobe: Int): DataFrame = {
-    val p = probes(queries, model, nprobe)
-    val candidates = assigned.join(broadcast(p), Seq("cluster_id"))
-      .select(
-        col("query_id"),
-        col("id").as("neighbor_id"),
-        model.metric.rankKey(col("qvec"), col("vec")).as("rank_key"))
-    FlatIndex.topK(candidates, 0, model.metric)
-  }
-
-  /** Blocked serving kernel, result-identical to [[search]]: probe
-    * ranking runs driver-side over the small centroid matrix (nq·nlist
-    * rank keys), a cluster→queries inverted index ships by broadcast, and
-    * each index partition streams once through a primitive loop scoring a
-    * row only against the queries that probe its cluster. The candidate
-    * rows are never materialized, joined, or shuffled — the final top-k
-    * merge sees ≤ k·partitions rows per query. Queries must fit on the
-    * driver (they are the bounded side by construction; use [[search]]
-    * for query *tables*). `query_id` is cast to LONG, like every blocked
-    * kernel; callers with non-long query ids should use [[search]]. */
+  /** Blocked batch search ([[BlockedScan]] over [[IvfScan]]),
+    * result-identical to [[search]]: probe ranking runs driver-side over
+    * the small centroid matrix, and each cluster-grouped partition scans
+    * only its probed clusters' rows. The candidate rows are never
+    * materialized, joined, or shuffled — the final top-k merge sees
+    * ≤ k·partitions rows per query. Queries must fit on the driver (use
+    * [[search]] for query *tables*); `query_id` is cast to LONG. */
   def searchBlocked(assigned: DataFrame, model: IvfModel, queries: DataFrame,
-      k: Int, nprobe: Int): DataFrame = {
-    if (k <= 0) return searchAll(assigned, model, queries, nprobe)
-    val np = math.min(math.max(nprobe, 1), model.nlist)
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val metric = model.metric
-    val cents = model.centroids.map(_.toArray).toArray
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    // per-query probe ranking is pure per slot — DriverPar fan-out
-    // (nq·nlist·dim flops were a serial driver phase per call)
-    val probes = new Array[Array[Int]](qvecs.length)
-    DriverPar.foreach(qvecs.length, chunk = 64) { qi =>
-      probes(qi) = probeSet(qvecs(qi), cents, metric, np)
-    }
-    val inv = invertedProbes(probes, model.nlist)
-    val bc = spark.sparkContext.broadcast((qids, qvecs, inv))
-    val partials = assigned
-      .select(col("id").cast("long"), col("vec"), col("cluster_id"))
-      .as[(Long, Array[Double], Int)] // primitive decode — no boxing
-      .mapPartitions { it =>
-        // Pack the partition CLUSTER-GROUPED (stable primitive sort by
-        // packed `cid<<32|row` keys — the GroupedByteBlock recipe), then
-        // scan cluster-outer / query-inner: each probing query walks its
-        // cluster's rows as ONE contiguous range with ONE resident heap.
-        // The rows-outer form probed the inverted list and touched
-        // qlist.length scattered heaps per row — LLC thrash at 32 tasks
-        // (VERDICT r12 wrong #1: ivf_qps anti-scaled with cores). Heap
-        // contents are insertion-order independent → partials identical.
-        val (qidArr, qs, inverted) = bc.value
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
-        val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
-        var dim = -1
-        while (it.hasNext) {
-          val (id, v, cid) = it.next()
-          require(cid >= 0, s"negative cluster_id $cid for id=$id")
-          idsB += id
-          tagsB += cid
-          if (dim < 0) dim = v.length
-          require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
-          dataB ++= v
-        }
-        val ids = idsB.result()
-        val rowTags = tagsB.result()
-        val data = dataB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val keys = new Array[Long](n)
-          var r = 0
-          while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
-          java.util.Arrays.sort(keys)
-          val gIds = new Array[Long](n)
-          val gData = new Array[Double](n * dim)
-          val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
-          val startList = scala.collection.mutable.ArrayBuilder.make[Int]
-          var prevTag = -1
-          r = 0
-          while (r < n) {
-            val tag = (keys(r) >>> 32).toInt
-            val src = (keys(r) & 0xFFFFFFFFL).toInt
-            gIds(r) = ids(src)
-            System.arraycopy(data, src * dim, gData, r * dim, dim)
-            if (tag != prevTag) { tagList += tag; startList += r; prevTag = tag }
-            r += 1
-          }
-          startList += n
-          val tags = tagList.result()
-          val starts = startList.result()
-          val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-          var t = 0
-          while (t < tags.length) {
-            val qlist = inverted(tags(t))
-            var li = 0
-            while (li < qlist.length) {
-              val qi = qlist(li)
-              val q = qs(qi)
-              val h = heaps(qi)
-              var rr = starts(t)
-              while (rr < starts(t + 1)) {
-                h.insert(gIds(rr), metric.rankKeyScalar(q, gData, rr * dim, dim))
-                rr += 1
-              }
-              li += 1
-            }
-            t += 1
-          }
-          BoundedTopK.drain(heaps, qidArr)
-        }
-      }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, metric)
-  }
+      k: Int, nprobe: Int): DataFrame =
+    if (k <= 0) search(assigned, model, queries, k, nprobe)
+    else BlockedScan.search(new IvfScan(model, nprobe), assigned, queries, k)
 
   /** Driver-side top-nprobe cluster ids for one query — the same
     * ascending (rank_key, cluster_id) order as [[probes]]. */

@@ -89,27 +89,14 @@ object IvfPqIndex {
       k: Int, nprobe: Int): DataFrame =
     search(encode(vectors, model), model, queries, k, nprobe)
 
-  /** Blocked serving kernel, result-identical to [[search]]: probe
-    * ranking and the per-(query, probe) residuals are computed
-    * driver-side (nq·nprobe·dim doubles — ~10 MB at nq=1000, dim=128),
-    * shipped as a cluster→(query, residual) inverted index by broadcast.
-    * Each codes partition streams once; a row is ADC-scored only against
-    * the queries probing its cluster, with the same per-subspace fold
-    * order as the PqAdc expression (bit-identical distances). Candidates
-    * are never materialized or shuffled — the final merge sees
-    * ≤ k·partitions rows per query.
-    *
-    * ADC tables hoist *adaptively, per cluster range*: a driver-side
-    * hoist of all nq·nprobe M×Ksub tables would broadcast ≈ 160 MB at
-    * nq=1000, so instead each partition packs cluster-grouped and builds
-    * a (cluster, query) table only when that cluster's row range is
-    * longer than `adcHoistThreshold` (default ksub — the flop
-    * break-even: one table costs dim·Ksub, each row then saves ~dim).
-    * Sparse clusters (the nq=1000 bench shape, ~10 rows per
-    * cluster-partition) never pay the table cost; dense clusters (the
-    * 100 TB layout, ≫ ksub rows per partition) converge to M lookups
-    * per row. The table entry and the direct form share the same
-    * per-subspace fold, so distances are bit-identical either way.
+  /** Blocked batch search ([[BlockedScan]] over [[IvfPqScan]]),
+    * result-identical to [[search]]: probe ranking and the per-(query,
+    * probe) residuals are computed driver-side and broadcast; each
+    * cluster-grouped codes partition scans only the probed clusters'
+    * ranges, ADC-scoring with the same per-subspace fold order as the
+    * PqAdc expression (bit-identical distances). The ADC table hoists per
+    * range — see [[IvfPqScan]]. Candidates are never materialized or
+    * shuffled; the final merge sees ≤ k·partitions rows per query.
     * `query_id` is cast to LONG, like every blocked kernel. */
   def searchBlocked(codes: DataFrame, model: IvfPqModel, queries: DataFrame,
       k: Int, nprobe: Int): DataFrame =
@@ -118,176 +105,7 @@ object IvfPqIndex {
   /** `adcHoistThreshold` < 0 means ksub (the flop break-even); 0 hoists
     * on the first row (test hook for the table path). */
   private[graft] def searchBlocked(codes: DataFrame, model: IvfPqModel,
-      queries: DataFrame, k: Int, nprobe: Int, adcHoistThreshold: Int): DataFrame = {
-    if (k <= 0) return search(codes, model, queries, k, nprobe)
-    val hoistAt = if (adcHoistThreshold >= 0) adcHoistThreshold else model.pq.ksub
-    val np = math.min(math.max(nprobe, 1), model.coarse.nlist)
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val cents = model.coarse.centroids.map(_.toArray).toArray
-    val cbs = model.pq.codebookArrays
-    val m = model.pq.m
-    val dsub = model.pq.dsub
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    // cluster -> (probing query indices, their residuals w.r.t. that centroid)
-    val nlist = model.coarse.nlist
-    // per-query probe ranking + residuals are pure per slot — DriverPar
-    // fan-out (was a serial driver phase per call); the inverted index
-    // is then assembled sequentially in ascending qi, so list order is
-    // deterministic and identical to the serial form
-    val probes = new Array[Array[Int]](qvecs.length)
-    val residuals = new Array[Array[Array[Double]]](qvecs.length)
-    DriverPar.foreach(qvecs.length, chunk = 64) { qi =>
-      val q = qvecs(qi)
-      val ps = IvfIndex.probeSet(q, cents, model.coarse.metric, np)
-      probes(qi) = ps
-      residuals(qi) = ps.map { c =>
-        val cent = cents(c)
-        val r = new Array[Double](q.length)
-        var i = 0
-        while (i < q.length) { r(i) = q(i) - cent(i); i += 1 }
-        r
-      }
-    }
-    val qiBuf = Array.fill(nlist)(new scala.collection.mutable.ArrayBuffer[Int])
-    val resBuf = Array.fill(nlist)(new scala.collection.mutable.ArrayBuffer[Array[Double]])
-    var qi = 0
-    while (qi < qvecs.length) {
-      val ps = probes(qi)
-      var pi = 0
-      while (pi < ps.length) {
-        qiBuf(ps(pi)) += qi
-        resBuf(ps(pi)) += residuals(qi)(pi)
-        pi += 1
-      }
-      qi += 1
-    }
-    val inv = Array.tabulate(nlist)(c => (qiBuf(c).toArray, resBuf(c).toArray))
-    val bc = spark.sparkContext.broadcast((qids, inv, cbs))
-    val partials = codes
-      .select(col("id").cast("long"), col("cluster_id"), col("code"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions { it =>
-        // Pack the partition CLUSTER-GROUPED (stable primitive sort by
-        // packed `cid<<32|row` keys), then scan cluster-outer / query-
-        // inner: each probing query walks its cluster's codes as ONE
-        // contiguous range with ONE resident heap and (when hoisted) ONE
-        // cache-resident flat ADC table. The rows-outer form touched
-        // qlist.length scattered heaps per row and thrashed the LLC at
-        // 32 tasks (VERDICT r12 wrong #1: ivfpq/opq_ivfpq QPS rows
-        // anti-scaled with cores). The adaptive per-row hoist becomes a
-        // per-range decision (range length known up front — build the
-        // table iff the range outweighs the table's dim·Ksub flops);
-        // table and direct forms add the SAME doubles in the SAME
-        // ascending-mi order (pinned bit-identical), and heap contents
-        // are insertion-order independent → partials bit-identical.
-        val (qidArr, inverted, cbs) = bc.value
-        val ksub = cbs(0).length
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
-        val codesB = scala.collection.mutable.ArrayBuilder.make[Int]
-        while (it.hasNext) {
-          val (id, cid, code) = it.next()
-          require(cid >= 0, s"negative cluster_id $cid for id=$id")
-          require(code.length == m,
-            s"code row for id=$id has ${code.length} codes, model has $m")
-          idsB += id
-          tagsB += cid
-          codesB ++= code
-        }
-        val ids = idsB.result()
-        val rowTags = tagsB.result()
-        val codeArr = codesB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val keys = new Array[Long](n)
-          var r = 0
-          while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
-          java.util.Arrays.sort(keys)
-          val gIds = new Array[Long](n)
-          val gCodes = new Array[Int](n * m)
-          val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
-          val startList = scala.collection.mutable.ArrayBuilder.make[Int]
-          var prevTag = -1
-          r = 0
-          while (r < n) {
-            val tag = (keys(r) >>> 32).toInt
-            val src = (keys(r) & 0xFFFFFFFFL).toInt
-            gIds(r) = ids(src)
-            System.arraycopy(codeArr, src * m, gCodes, r * m, m)
-            if (tag != prevTag) { tagList += tag; startList += r; prevTag = tag }
-            r += 1
-          }
-          startList += n
-          val tags = tagList.result()
-          val starts = startList.result()
-          val heaps = Array.fill(qidArr.length)(new BoundedTopK(k))
-          val tabBuf = new Array[Double](m * ksub) // reused per (cluster, query)
-          var t = 0
-          while (t < tags.length) {
-            val (qlist, rlist) = inverted(tags(t))
-            val lo = starts(t)
-            val hi = starts(t + 1)
-            val useTable = (hi - lo) > hoistAt
-            var li = 0
-            while (li < qlist.length) {
-              val h = heaps(qlist(li))
-              val res = rlist(li)
-              if (useTable) {
-                // entry mi·ksub + j: same inner fold as the direct form
-                var mi = 0
-                while (mi < m) {
-                  val off = mi * dsub
-                  var j = 0
-                  while (j < ksub) {
-                    val row = cbs(mi)(j)
-                    var d = 0.0
-                    var i = 0
-                    while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
-                    tabBuf(mi * ksub + j) = d
-                    j += 1
-                  }
-                  mi += 1
-                }
-                var rr = lo
-                while (rr < hi) {
-                  val cOff = rr * m
-                  var acc = 0.0
-                  var mi2 = 0
-                  while (mi2 < m) { acc += tabBuf(mi2 * ksub + gCodes(cOff + mi2)); mi2 += 1 }
-                  h.insert(gIds(rr), acc)
-                  rr += 1
-                }
-              } else {
-                var rr = lo
-                while (rr < hi) {
-                  val cOff = rr * m
-                  var acc = 0.0
-                  var mi2 = 0
-                  while (mi2 < m) {
-                    val row = cbs(mi2)(gCodes(cOff + mi2))
-                    val off = mi2 * dsub
-                    var d = 0.0
-                    var i = 0
-                    while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
-                    acc += d
-                    mi2 += 1
-                  }
-                  h.insert(gIds(rr), acc)
-                  rr += 1
-                }
-              }
-              li += 1
-            }
-            t += 1
-          }
-          BoundedTopK.drain(heaps, qidArr)
-        }
-      }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, Metric.L2)
-  }
+      queries: DataFrame, k: Int, nprobe: Int, adcHoistThreshold: Int): DataFrame =
+    if (k <= 0) search(codes, model, queries, k, nprobe)
+    else BlockedScan.search(new IvfPqScan(model, nprobe, adcHoistThreshold), codes, queries, k)
 }

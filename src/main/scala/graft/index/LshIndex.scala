@@ -45,15 +45,8 @@ object LshIndex {
     * within. Queries landing in sparse buckets return < k rows — the
     * documented ANN tradeoff (recall vs probe cost). */
   def knn(indexed: DataFrame, queries: DataFrame, k: Int, planes: Int,
-      metric: Metric): DataFrame = {
-    val q = queries.withColumn("bucket", bucket(col("qvec"), planes))
-    val candidates = indexed.join(broadcast(q), Seq("bucket"))
-      .select(
-        col("query_id"),
-        col("id").as("neighbor_id"),
-        metric.rankKey(col("qvec"), col("vec")).as("rank_key"))
-    FlatIndex.topK(candidates, k, metric)
-  }
+      metric: Metric): DataFrame =
+    probeKnn(indexed, queries.withColumn("bucket", bucket(col("qvec"), planes)), k, metric)
 
   /** The query's probe buckets at Hamming radius ≤ 1: its own bucket plus
     * each single-bit flip. A neighbor separated by exactly one hyperplane
@@ -68,10 +61,14 @@ object LshIndex {
     * one bucket and the probe set is distinct, so no (query, neighbor)
     * pair duplicates — no dedup shuffle needed. */
   def knnMultiProbe(indexed: DataFrame, queries: DataFrame, k: Int, planes: Int,
+      metric: Metric): DataFrame =
+    probeKnn(indexed, queries.withColumn("bucket",
+      explode(probeBuckets(bucket(col("qvec"), planes), planes))), k, metric)
+
+  /** Exact re-rank of the rows in each query row's `bucket`. */
+  private def probeKnn(indexed: DataFrame, probes: DataFrame, k: Int,
       metric: Metric): DataFrame = {
-    val q = queries
-      .withColumn("bucket", explode(probeBuckets(bucket(col("qvec"), planes), planes)))
-    val candidates = indexed.join(broadcast(q), Seq("bucket"))
+    val candidates = indexed.join(broadcast(probes), Seq("bucket"))
       .select(
         col("query_id"),
         col("id").as("neighbor_id"),
@@ -88,112 +85,21 @@ object LshIndex {
     org.apache.spark.sql.graftx.LshBucketKernel.bucketArray(vec, planes)
   }
 
-  /** Blocked ANN kernel, result-identical to [[knn]]: query buckets are
-    * computed driver-side, a bucket→queries hash map ships by broadcast,
-    * and each index partition streams once, scoring a row only against
-    * the queries in its bucket via the shared [[BoundedTopK]] buffer —
-    * candidates never materialize into a join or shuffle. `query_id` is
-    * cast to LONG, like every blocked kernel. */
+  /** Blocked batch search ([[BlockedScan]] over [[LshScan]]),
+    * result-identical to [[knn]] (hamming = 0) and [[knnMultiProbe]]
+    * (hamming = 1): query buckets are computed driver-side and each
+    * bucket-grouped partition scans only the probed buckets' rows —
+    * candidates never materialize into a join or shuffle. Works for every
+    * `planes` the index accepts (1–62). `query_id` is cast to LONG, like
+    * every blocked kernel. */
   def knnBlocked(indexed: DataFrame, queries: DataFrame, k: Int, planes: Int,
       metric: Metric, hamming: Int = 0): DataFrame = {
     require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
-    if (k <= 0) return knn(indexed, queries, k, planes, metric)
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    val byBucket = new scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]
-    def register(b: Long, qi: Int): Unit =
-      byBucket.getOrElseUpdate(b, new scala.collection.mutable.ArrayBuffer[Int]) += qi
-    qvecs.zipWithIndex.foreach { case (q, qi) =>
-      val qb = bucketScalar(q, planes)
-      register(qb, qi)
-      if (hamming >= 1) (0 until planes).foreach(p => register(qb ^ (1L << p), qi))
+    if (k <= 0) knn(indexed, queries, k, planes, metric)
+    else {
+      val rows = Layouts.BucketedVectors.rows(indexed)
+      BlockedScan.search(new LshScan(planes, metric, hamming, Layout.width(rows)), rows, queries, k)
     }
-    val inv: Map[Long, Array[Int]] = byBucket.map { case (b, qs) => b -> qs.toArray }.toMap
-    val bc = spark.sparkContext.broadcast((qids, qvecs, inv))
-    // sign-LSH buckets are plane-bit sums < 2^planes, so they pack into
-    // the high word of the grouping sort key below
-    require(planes <= 31, s"knnBlocked supports planes <= 31, got $planes")
-    val partials = indexed.select(col("id").cast("long"), col("vec"), col("bucket"))
-      .as[(Long, Array[Double], Long)] // primitive decode — no boxing
-      .mapPartitions { it =>
-        // Pack the partition BUCKET-GROUPED (stable primitive sort by
-        // packed `bucket<<32|row` keys), then scan bucket-outer /
-        // query-inner: each registered query walks its bucket's rows as
-        // ONE contiguous range with ONE resident heap. The rows-outer
-        // form touched qlist.length scattered heaps per row — LLC
-        // thrash at 32 tasks (VERDICT r12 wrong #1: lsh_qps anti-scaled
-        // with cores). Heap contents are insertion-order independent →
-        // partials bit-identical.
-        val (qidArr, qs, inverted) = bc.value
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
-        val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
-        var dim = -1
-        while (it.hasNext) {
-          val (id, v, b) = it.next()
-          require(b >= 0 && b <= Int.MaxValue, s"bucket $b out of range for id=$id")
-          idsB += id
-          tagsB += b.toInt
-          if (dim < 0) dim = v.length
-          require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
-          dataB ++= v
-        }
-        val ids = idsB.result()
-        val rowTags = tagsB.result()
-        val data = dataB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val keys = new Array[Long](n)
-          var r = 0
-          while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
-          java.util.Arrays.sort(keys)
-          val gIds = new Array[Long](n)
-          val gData = new Array[Double](n * dim)
-          val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
-          val startList = scala.collection.mutable.ArrayBuilder.make[Int]
-          var prevTag = -1
-          r = 0
-          while (r < n) {
-            val tag = (keys(r) >>> 32).toInt
-            val src = (keys(r) & 0xFFFFFFFFL).toInt
-            gIds(r) = ids(src)
-            System.arraycopy(data, src * dim, gData, r * dim, dim)
-            if (tag != prevTag) { tagList += tag; startList += r; prevTag = tag }
-            r += 1
-          }
-          startList += n
-          val tags = tagList.result()
-          val starts = startList.result()
-          val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-          var t = 0
-          while (t < tags.length) {
-            inverted.get(tags(t).toLong) match {
-              case Some(qlist) =>
-                var li = 0
-                while (li < qlist.length) {
-                  val qi = qlist(li)
-                  val q = qs(qi)
-                  val h = heaps(qi)
-                  var rr = starts(t)
-                  while (rr < starts(t + 1)) {
-                    h.insert(gIds(rr), metric.rankKeyScalar(q, gData, rr * dim, dim))
-                    rr += 1
-                  }
-                  li += 1
-                }
-              case None =>
-            }
-            t += 1
-          }
-          BoundedTopK.drain(heaps, qidArr)
-        }
-      }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, metric)
   }
 
   // ---- DuckDB fragments ----

@@ -212,7 +212,9 @@ object OpqIndex {
   def knn(codes: DataFrame, model: OpqModel, queries: DataFrame, k: Int): DataFrame =
     PqIndex.knn(codes, model.pq, rotateQueries(queries, model), k)
 
-  /** Blocked serving kernel (PqIndex.knnBlocked semantics). */
+  /** Blocked batch search ([[BlockedScan]] over [[OpqScan]]: the PQ scan
+    * behind a driver-side rotation of each query). */
   def knnBlocked(codes: DataFrame, model: OpqModel, queries: DataFrame, k: Int): DataFrame =
-    PqIndex.knnBlocked(codes, model.pq, rotateQueries(queries, model), k)
+    if (k <= 0) knn(codes, model, queries, k)
+    else BlockedScan.search(new OpqScan(model), codes, queries, k)
 }

@@ -284,98 +284,18 @@ object PqIndex {
   def adcDist2(qvec: Column, code: Column, model: PqModel): Column =
     org.apache.spark.sql.graftx.IndexExpressions.pqAdc(qvec, code, model.codebooks)
 
-  /** Blocked ADC kNN: per-query distance tables (M × Ksub subspace
-    * distances — the reference's loop-invariant hoist, pq.go:144-155)
-    * are precomputed ONCE on the driver and broadcast (nq·M·Ksub
-    * doubles), so the code scan is M table lookups per (code, query)
-    * instead of dim flops — 16× less arithmetic at M=8, dsub=16. The
-    * n·q candidate rows are never materialized. Results identical to
-    * [[knn]] (same per-subspace fold order).
-    *
-    * Hot-loop layout (r13; history: r5 shipped per-query table objects
-    * that degraded 4.9× under memory contention, r5 #2's fix transposed
-    * them into one `(mi·ksub + code)·nq + qi` array — which walked a
-    * 33 MB table per ROW and anti-scaled with cores, VERDICT r12 wrong
-    * #1): the partition's codes flat-pack once, then the scan runs
-    * QUERY-OUTER — the active query's 32 KB flat table stays cache-
-    * resident, the code block streams contiguously, and only ONE top-k
-    * buffer is hot at a time. Per-query accumulation stays ascending-mi
-    * over the same [[adcTable]] doubles, and top-k contents are
-    * insertion-order independent, so distances and partials are
-    * bit-identical to both prior layouts and to [[knn]]. Codes decode
-    * via the primitive `Array[Int]` encoder (no per-element boxing). */
-  def knnBlocked(codes: DataFrame, model: PqModel, queries: DataFrame, k: Int): DataFrame = {
-    if (k <= 0) return knn(codes, model, queries, k)
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val m = model.m
-    val ksub = model.ksub
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val nq = qids.length
-    // one flat M·Ksub table per query, concatenated: query qi's table at
-    // offset qi·m·ksub — 32 KB per query, L2-resident during its scan
-    val tabs = new Array[Double](nq * m * ksub)
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    // pure per-query table builds — DriverPar slot writes (the trainer
-    // recipe): deterministic, each query's table lands in its own range
-    graft.index.DriverPar.foreach(nq, chunk = 64) { ti =>
-      val tab = adcTable(qvecs(ti), model)
-      System.arraycopy(tab, 0, tabs, ti * m * ksub, tab.length)
-    }
-    val bc = spark.sparkContext.broadcast((qids, tabs))
-    val partials = codes.select(col("id").cast("long"), col("code"))
-      .as[(Long, Array[Int])]
-      .mapPartitions { it =>
-        // Flat-pack the partition's codes once, then scan QUERY-OUTER:
-        // the active query's 32 KB ADC table stays cache-resident and
-        // the code block streams contiguously, with ONE resident heap.
-        // The r5 rows-outer form walked M runs of nq doubles across a
-        // 33 MB transposed table per row and touched all nq heaps — a
-        // working set that thrashed the shared LLC once 32 tasks ran it
-        // (VERDICT r12 wrong #1: pq/opq QPS anti-scaled with cores).
-        // Per-pair accumulation is still ascending-mi over the SAME
-        // adcTable doubles, and heap contents are insertion-order
-        // independent — partials bit-identical.
-        val (qidArr, t) = bc.value
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val codesB = scala.collection.mutable.ArrayBuilder.make[Int]
-        while (it.hasNext) {
-          val (id, code) = it.next()
-          require(code.length == m,
-            s"code row for id=$id has ${code.length} codes, model has $m")
-          idsB += id
-          codesB ++= code
-        }
-        val ids = idsB.result()
-        val codeBlk = codesB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          qidArr.indices.iterator.flatMap { qi =>
-            val tBase = qi * m * ksub
-            val h = new BoundedTopK(k)
-            var r = 0
-            var off = 0
-            while (r < n) {
-              var acc = 0.0
-              var mi = 0
-              while (mi < m) {
-                acc += t(tBase + mi * ksub + codeBlk(off + mi))
-                mi += 1
-              }
-              h.insert(ids(r), acc)
-              r += 1
-              off += m
-            }
-            val qid = qidArr(qi)
-            (0 until h.size).iterator.map(s => (qid, h.ids(s), h.dists(s)))
-          }
-        }
-      }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, Metric.L2)
-  }
+  /** Blocked ADC kNN ([[BlockedScan]] over [[PqScan]]): per-query M×Ksub
+    * distance tables (the reference's loop-invariant hoist, pq.go:144-155)
+    * are built ONCE on the driver and broadcast, so the code scan is M
+    * table lookups per (code, query) instead of dim flops — 16× less
+    * arithmetic at M=8, dsub=16. The scan runs query-outer: the active
+    * query's 32 KB table stays cache-resident while the code block streams
+    * (VERDICT r12 wrong #1: a transposed 33 MB table walked per row
+    * anti-scaled with cores). Results identical to [[knn]] (same
+    * per-subspace fold order). */
+  def knnBlocked(codes: DataFrame, model: PqModel, queries: DataFrame, k: Int): DataFrame =
+    if (k <= 0) knn(codes, model, queries, k)
+    else BlockedScan.search(new PqScan(model), codes, queries, k)
 
   /** FLAT M·Ksub subspace distance table for one (residual) query vector —
     * the loop-invariant ADC hoist (pq.go:144-155), entry `mi·ksub + j` in
@@ -385,13 +305,16 @@ object PqIndex {
     * one load per subspace. Inner fold matches
     * [[org.apache.spark.sql.graftx.IndexExpressions.pqAdc]] per-subspace
     * accumulation bit-for-bit, so table-sum == expression ADC exactly. */
-  private[graft] def adcTable(q: Array[Double], model: PqModel): Array[Double] = {
-    val dsub = model.dsub
-    val ksub = model.ksub
-    val cbs = model.codebookArrays
-    val out = new Array[Double](model.m * ksub)
+  private[graft] def adcTable(q: Array[Double], model: PqModel): Array[Double] =
+    adcTableInto(q, model.codebookArrays, new Array[Double](model.m * model.ksub))
+
+  /** [[adcTable]] into a caller-owned `out` (m·ksub doubles); returns it. */
+  private[graft] def adcTableInto(q: Array[Double], cbs: Array[Array[Array[Double]]],
+      out: Array[Double]): Array[Double] = {
+    val ksub = cbs(0).length
+    val dsub = cbs(0)(0).length
     var mi = 0
-    while (mi < model.m) {
+    while (mi < cbs.length) {
       val book = cbs(mi)
       val off = mi * dsub
       var j = 0

@@ -340,9 +340,7 @@ object RoutedHnswIndex {
       return FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, metric)
     val spark = graph.sparkSession
     import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
+    val (qids, qvecs) = BlockedScan.collectQueries(queries)
     val probes = qvecs.map(probeShards(_, model, probeRegions))
     val inv = IvfIndex.invertedProbes(probes, model.numShards)
     val touched = probes.flatten.distinct.sorted

@@ -55,8 +55,6 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
       .localCheckpoint()
   }
 
-  /** Materialize the shard graphs (call once before timing queries). */
-  def warm(): this.type = { rdd.count(); this }
 
   /** Batch kNN over the RESIDENT graphs — result-identical to
     * [[HnswIndex.knnBlocked]] (same walks, same [[BoundedTopK]] merge)
@@ -76,10 +74,7 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
       efSearch: Int = HnswIndex.EfSearch): DataFrame = {
     require(k > 0, s"serving requires k > 0, got $k")
     val spark = graph.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
+    val (qids, qvecs) = graft.index.BlockedScan.collectQueries(queries)
     val bc = spark.sparkContext.broadcast((qids, qvecs))
     val ef = math.max(efSearch, k)
     val partials = rdd.mapPartitions { it =>
@@ -104,16 +99,7 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
       }
       BoundedTopK.drain(heaps, ids)
     }.collect()
-    val qPos = new scala.collection.mutable.LongMap[Int](qids.length * 2)
-    qids.zipWithIndex.foreach { case (q, i) => qPos(q) = i }
-    val merged = Array.fill(qids.length)(new BoundedTopK(k))
-    partials.foreach { case (q, id, d) => merged(qPos(q)).insert(id, d) }
-    val rows = qids.indices.iterator.flatMap { qi =>
-      merged(qi).ranked.iterator.map { case (id, d, r) =>
-        (qids(qi), id, m.finishRankScalar(d), r)
-      }
-    }.toSeq
-    spark.createDataset(rows).toDF("query_id", "neighbor_id", "distance", "rank")
+    ServeBlocks.mergeBatch(spark, qids, partials, k, m, distinct = false)
   }
 
   /** One query → top-k (id, distance, rank), driver-merged. */
@@ -121,14 +107,8 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
       efSearch: Int = HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     val ef = math.max(efSearch, k)
-    val partials = rdd.mapPartitions { it =>
-      val merge = new BoundedTopK(k)
-      it.foreach(g => g.knnInto(q, k, ef, merge))
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, m.finishRankScalar(d), r) }
+    ServeBlocks.job(rdd, k)((g: CompiledHnsw, merge) => g.knnInto(q, k, ef, merge))
+      .ranked.map { case (id, d, r) => (id, m.finishRankScalar(d), r) }
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

@@ -1,10 +1,8 @@
 package graft.query
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
-import graft.core.Metric
-import graft.index.{BoundedTopK, IvfIndex, IvfModel}
+import graft.index.{IvfModel, IvfScan, Layouts}
 
 /** Online single-query serving over an IVF index — the closest Spark gets
   * to the reference's in-process `Search(query []float32, k int)`
@@ -12,58 +10,23 @@ import graft.index.{BoundedTopK, IvfIndex, IvfModel}
   *
   * Spark's floor for one query is a scheduled job, so the hot path is
   * engineered down to exactly ONE single-stage RDD job and nothing else:
-  *  - the assigned table is packed ONCE into [[ServeBlocks.ServePartitions]]
-  *    cached primitive blocks — one flat data array per partition, no
-  *    per-row objects (VERDICT r3 #3: the boxed-tuple cache's GC pauses
-  *    made p95 78× p50) — construction cost, not query cost;
-  *  - per query: probe ranking runs on the driver (nlist rank keys), a
-  *    boolean cluster mask ships in the task closure (no broadcast, no SQL
-  *    plan analysis, no codegen — those cost 0.5–2 s per call through the
-  *    DataFrame path and were the round-2 serving pathology);
-  *  - each partition emits its bounded top-k; the driver merges
-  *    ≤ k·partitions candidates.
+  * the assigned table packs ONCE into cluster-grouped blocks
+  * ([[ServeBlocks]]); per query the probe ranking runs on the driver
+  * ([[graft.index.IvfScan]]) and the probed cluster ids ship in the task
+  * closure (no broadcast, no SQL plan analysis, no codegen — those cost
+  * 0.5–2 s per call through the DataFrame path and were the round-2
+  * serving pathology); each partition scans only its probed clusters'
+  * rows and emits its bounded top-k; the driver merges.
   *
-  * Result order/tie-break matches [[IvfIndex.searchBlocked]] exactly:
-  * ascending (rank_key, id).
+  * Result order/tie-break matches [[graft.index.IvfIndex.searchBlocked]]
+  * exactly: ascending (rank_key, id) — the same kernel.
   */
-// deliberately NOT Serializable: the per-query closure must capture only
-// locals (mask, metric, q, k) — capturing `this` would drag the DataFrame in
+// deliberately NOT Serializable — per-query closures capture only locals
 final class IvfServer(assigned: DataFrame, model: IvfModel) extends ServingRdd {
 
-  private val metric = model.metric
-  private val cents = model.centroids.map(_.toArray).toArray
-
-  private val rdd: RDD[ServeBlock] = ServeBlocks.pack(assigned, "cluster_id")
-
-  /** Materialize the serving blocks (call once before timing queries). */
-  def warm(): this.type = { rdd.count(); this }
+  protected val servingRdd = ServeBlocks.pack(Layouts.ClusteredVectors, assigned)
 
   /** One query → top-k (id, distance, rank), driver-merged. */
-  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    val np = math.min(math.max(nprobe, 1), model.nlist)
-    val mask = new Array[Boolean](model.nlist)
-    IvfIndex.probeSet(q, cents, metric, np).foreach(mask(_) = true)
-    val m = metric
-    val partials = rdd.mapPartitions { it =>
-      val merge = new BoundedTopK(k)
-      while (it.hasNext) {
-        val blk = it.next()
-        val dim = blk.dim
-        val n = blk.ids.length
-        var r = 0
-        while (r < n) {
-          if (mask(blk.tags(r).toInt))
-            merge.insert(blk.ids(r), m.rankKeyScalar(q, blk.data, r * dim, dim))
-          r += 1
-        }
-      }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
-  }
-
-  protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd
+  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] =
+    ServeBlocks.search(servingRdd, new IvfScan(model, nprobe), q, k)
 }

@@ -3,10 +3,10 @@ package graft.query
 import java.util.stream.IntStream
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.core.Metric
-import graft.index.{BoundedTopK, BqIndex, BqModel, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PqIndex, PqModel, RoutedHnswIndex, RoutedHnswModel, Sq8Model}
+import graft.index.{Block, BoundedTopK, BqModel, BqScan, FlatScan, IvfModel, IvfPqModel, IvfPqScan, IvfScan, IvfSq8Scan, Layout, Layouts, LshScan, OpqModel, OpqScan, PqModel, PqScan, RoutedHnswIndex, RoutedHnswModel, ScanKernel, Sq8Model, Sq8Scan}
 
 /** Kind-erased in-process serving handle — what [[Searcher.localServer]]
   * returns: one query in, (id, distance, rank) out, with the facade's
@@ -17,53 +17,40 @@ trait LocalServer {
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]]
 }
 
-/** Pairs a kind's single-query and batch entry points behind the
-  * kind-erased facade handle. */
-private[graft] final case class LocalServerAdapter(
-    single: (Array[Double], Int) => Array[(Long, Double, Int)],
-    batched: (Array[Array[Double]], Int) => Array[Array[(Long, Double, Int)]])
-    extends LocalServer {
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = single(q, k)
-  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
-    batched(qs, k)
-}
-
-/** In-process single-query serving: the SAME packed blocks the
-  * distributed servers scan, collected to the driver ONCE, scanned with
-  * the SAME scalar kernels — zero Spark jobs per query.
+/** In-process serving: zero Spark jobs per query.
+  *
+  * Every scan kind has ONE kernel ([[graft.index.ScanKernel]]: pack,
+  * prepare, scan) and three drivers run it — the blocked batch search
+  * ([[graft.index.BlockedScan]]), the distributed `ServingRdd` servers
+  * ([[ServeBlocks]], one single-stage Spark job per query) and this one,
+  * which collects the kind's packed blocks to the driver ONCE and scans
+  * them on the JVM common pool. All three are a local top-k per block
+  * followed by one merge under the same (rank_key, id) total order, so
+  * the in-process servers are result-IDENTICAL to their distributed and
+  * batch siblings by construction (LocalServeSpec, ThreePathParitySpec).
+  * IVF, IVFPQ, IVF×SQ8 and LSH (any planes in 1–62) scan only their
+  * probed groups of the tag-grouped blocks; flat, PQ, OPQ, SQ8 and BQ
+  * scan every row.
   *
   * This is the reference's deployment shape: its facade serves queries
   * against heap-resident structures in-process (pkg/search/search.go —
   * no scheduler in the hot path), which is why its single-query
   * latencies are micro-to-milliseconds while every Spark job pays a
-  * ~10-20 ms scheduling floor (the floorProbe rows prove the floor is
-  * dispatch, not scan). The split is deliberate:
-  *
-  *  - `ServingRdd` servers (IvfServer, PqServer, …) are the CLUSTER
-  *    path — resident state sharded across executors; the only shape
-  *    that exists at 100 TB.
-  *  - `Local*Server`s are the SINGLE-HEAP path for state that fits the
-  *    driver (the reference's only mode): flat doubles are n·dim·8 B,
-  *    SQ8 n·dim B, PQ n·M ints, BQ n·dim/8 B — at the reference's own
-  *    protocol (100k × 128d) that is 102 MB worst case and the scan
-  *    costs micro/milliseconds.
-  *
-  * Blocks scan on the JVM common pool (one task per block — same
-  * granularity as ServePartitions); the per-block bounded heaps merge
-  * under the same (rank_key, id) total order as the distributed merge,
-  * so every Local server is result-IDENTICAL to its ServingRdd sibling
-  * (spec-asserted in LocalServeSpec).
+  * ~10-20 ms scheduling floor. `ServingRdd` servers are the CLUSTER path
+  * (resident state sharded across executors — the only shape that exists
+  * at 100 TB); the `Local*Server`s are the SINGLE-HEAP path for state
+  * that fits the driver: flat doubles are n·dim·8 B, SQ8 n·dim B, PQ n·M
+  * ints, BQ n·dim/8 B — at the reference's own protocol (100k × 128d)
+  * that is 102 MB worst case. HNSW kinds walk their compiled shard graphs
+  * through the same [[LocalServe.scan]]/[[LocalServe.batch]] helpers.
   */
 private[graft] object LocalServe {
 
-  /** Collect packed blocks through the existing packer, then release the
-    * temporary RDD — the driver copy is the only resident state. */
-  def collect[B](packed: org.apache.spark.rdd.RDD[B])(
-      implicit ct: scala.reflect.ClassTag[B]): Array[B] = {
-    val blocks = packed.collect()
-    packed.unpersist()
-    blocks
-  }
+  /** Collect a kind's packed blocks — the same packer and serving
+    * partitioning as [[ServeBlocks]]; the driver copy is the only
+    * resident state. */
+  def collect[E](layout: Layout[E], index: DataFrame): Array[Block[E]] =
+    ServeBlocks.blocks(layout, index).collect()
 
   /** Batch-throughput twin of [[scan]]: QUERIES fan across the common
     * pool and each query's blocks scan sequentially on its worker into
@@ -72,8 +59,8 @@ private[graft] object LocalServe {
     * per-query 32-task fan-out rivals the scans themselves). Merging
     * every block into one heap is order-invariant, so per query the
     * result is identical to [[scan]]'s two-level merge. `mk` runs once
-    * per query for per-query precomputation (probe masks, ADC tables,
-    * packed query codes) shared across that query's blocks. */
+    * per query for per-query precomputation shared across that query's
+    * blocks. */
   def batch[B](qs: Array[Array[Double]], blocks: Array[B], k: Int)(
       mk: Array[Double] => (B, BoundedTopK) => Unit): Array[BoundedTopK] = {
     val out = new Array[BoundedTopK](qs.length)
@@ -105,178 +92,102 @@ private[graft] object LocalServe {
     else partials.foreach(_.foreach { case (id, d) => top.insert(id, d) })
     top
   }
+
+  /** One query: prepare on the calling thread, blocks scan in parallel. */
+  def search[E, P](kernel: ScanKernel[E, P], blocks: Array[Block[E]], q: Array[Double],
+      k: Int): Array[(Long, Double, Int)] = {
+    require(k > 0, s"serving requires k > 0, got $k")
+    val p = kernel.prepare(q)
+    finish(kernel, scan(blocks, k)((blk, heap) => kernel.scan(p, blk, heap)))
+  }
+
+  /** Query-parallel batch; per query ≡ [[search]]. */
+  def searchBatch[E, P](kernel: ScanKernel[E, P], blocks: Array[Block[E]],
+      qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
+    require(k > 0, s"serving requires k > 0, got $k")
+    batch(qs, blocks, k) { q =>
+      val p = kernel.prepare(q)
+      (blk, heap) => kernel.scan(p, blk, heap)
+    }.map(finish(kernel, _))
+  }
+
+  private def finish(kernel: ScanKernel[_, _], top: BoundedTopK): Array[(Long, Double, Int)] =
+    top.ranked.map { case (id, d, r) => (id, kernel.finish.finishRankScalar(d), r) }
+}
+
+/** A kernel over its collected blocks — the in-process driver
+  * [[Searcher.localServer]] builds for every scan kind. */
+private[graft] final class LocalScan[E, P](kernel: ScanKernel[E, P], blocks: Array[Block[E]])
+    extends LocalServer {
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] =
+    LocalServe.search(kernel, blocks, q, k)
+  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
+    LocalServe.searchBatch(kernel, blocks, qs, k)
+}
+
+private[graft] object LocalScan {
+  def apply[E, P](kernel: ScanKernel[E, P], index: DataFrame): LocalScan[E, P] =
+    new LocalScan(kernel, LocalServe.collect(kernel.layout, index))
 }
 
 /** In-process exhaustive scan — the reference's flat kind served the
-  * reference's way. Result-identical to FlatIndex.knnBlocked's order. */
+  * reference's way. Result-identical to FlatIndex.knnBlocked. */
 final class LocalFlatServer(vectors: DataFrame, metric: Metric) {
-  private val blocks: Array[ServeBlock] =
-    LocalServe.collect(ServeBlocks.pack(vectors.withColumn("tag0", lit(0L)), "tag0"))
-
-  private def scanBlock(q: Array[Double])(blk: ServeBlock, merge: BoundedTopK): Unit = {
-    val dim = blk.dim
-    var r = 0
-    while (r < blk.ids.length) {
-      merge.insert(blk.ids(r), metric.rankKeyScalar(q, blk.data, r * dim, dim))
-      r += 1
-    }
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(scanBlock(q))
-      .ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
-  }
-
+  private val local =
+    LocalScan(new FlatScan(metric, Layout.width(Layouts.Vectors.rows(vectors))), vectors)
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = local.search(q, k)
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
-  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => scanBlock(q))
-      .map(_.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) })
-  }
+  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
+    local.searchBatch(qs, k)
 }
 
-/** In-process IVF: driver probe ranking + mask-pruned local scan.
+/** In-process IVF: driver probe ranking, probed clusters' rows only.
   * Result-identical to [[IvfServer.search]]. */
 final class LocalIvfServer(assigned: DataFrame, model: IvfModel) {
-  private val metric = model.metric
-  private val cents = model.centroids.map(_.toArray).toArray
-  private val blocks: Array[ServeBlock] =
-    LocalServe.collect(ServeBlocks.pack(assigned, "cluster_id"))
-
-  /** Per-query probe mask + masked-scan closure (precomputation shared
-    * across the query's blocks). */
-  private def maskedScan(q: Array[Double], nprobe: Int): (ServeBlock, BoundedTopK) => Unit = {
-    val np = math.min(math.max(nprobe, 1), model.nlist)
-    val mask = new Array[Boolean](model.nlist)
-    IvfIndex.probeSet(q, cents, metric, np).foreach(mask(_) = true)
-    (blk, merge) => {
-      val dim = blk.dim
-      var r = 0
-      while (r < blk.ids.length) {
-        if (mask(blk.tags(r).toInt))
-          merge.insert(blk.ids(r), metric.rankKeyScalar(q, blk.data, r * dim, dim))
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(maskedScan(q, nprobe))
-      .ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
-  }
-
+  private val blocks = LocalServe.collect(Layouts.ClusteredVectors, assigned)
+  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] =
+    LocalServe.search(new IvfScan(model, nprobe), blocks, q, k)
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      nprobe: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => maskedScan(q, nprobe))
-      .map(_.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) })
-  }
+      nprobe: Int): Array[Array[(Long, Double, Int)]] =
+    LocalServe.searchBatch(new IvfScan(model, nprobe), blocks, qs, k)
 }
 
-/** In-process sign-LSH: bucket + Hamming-1 probes, binary-searched per
-  * row. Result-identical to [[LshServer.search]]. */
+/** In-process sign-LSH: the query's bucket (+ Hamming-1 flips), those
+  * buckets' rows only. Result-identical to [[LshServer.search]]. */
 final class LocalLshServer(indexed: DataFrame, planes: Int, metric: Metric) {
-  private val blocks: Array[ServeBlock] =
-    LocalServe.collect(ServeBlocks.pack(indexed, "bucket"))
-
-  /** Per-query bucket-probe set + filtered-scan closure. */
-  private def probeScan(q: Array[Double], hamming: Int): (ServeBlock, BoundedTopK) => Unit = {
-    require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
-    val qb = LshIndex.bucketScalar(q, planes)
-    val probes: Array[Long] =
-      if (hamming == 0) Array(qb)
-      else (qb +: Array.tabulate(planes)(p => qb ^ (1L << p))).sorted
-    (blk, merge) => {
-      val dim = blk.dim
-      var r = 0
-      while (r < blk.ids.length) {
-        if (java.util.Arrays.binarySearch(probes, blk.tags(r)) >= 0)
-          merge.insert(blk.ids(r), metric.rankKeyScalar(q, blk.data, r * dim, dim))
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, hamming: Int = 1): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(probeScan(q, hamming))
-      .ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
-  }
-
+  private val blocks = LocalServe.collect(Layouts.BucketedVectors, indexed)
+  private val dim = Layout.width(Layouts.BucketedVectors.rows(indexed))
+  private def kernel(hamming: Int) = new LshScan(planes, metric, hamming, dim)
+  def search(q: Array[Double], k: Int, hamming: Int = 1): Array[(Long, Double, Int)] =
+    LocalServe.search(kernel(hamming), blocks, q, k)
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      hamming: Int = 1): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => probeScan(q, hamming))
-      .map(_.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) })
-  }
+      hamming: Int = 1): Array[Array[(Long, Double, Int)]] =
+    LocalServe.searchBatch(kernel(hamming), blocks, qs, k)
 }
 
 /** In-process PQ ADC: driver distance table, M int lookups per row.
   * Result-identical to [[PqServer.search]]. */
 final class LocalPqServer(codes: DataFrame, model: PqModel) {
-  private val blocks: Array[CodeBlock] =
-    LocalServe.collect(ServeBlocks.packCodes(codes, None))
-
-  /** Per-query ADC table + scan closure. */
-  private def adcScan(q: Array[Double]): (CodeBlock, BoundedTopK) => Unit = {
-    val tab = PqIndex.adcTable(q, model)
-    val ksub = model.ksub
-    (blk, merge) => {
-      val m = blk.m
-      var r = 0
-      while (r < blk.ids.length) {
-        val off = r * m
-        var d = 0.0
-        var mi = 0
-        while (mi < m) { d += tab(mi * ksub + blk.codes(off + mi)); mi += 1 }
-        merge.insert(blk.ids(r), d)
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(adcScan(q))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
-  }
-
+  private val local = LocalScan(new PqScan(model), codes)
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = local.search(q, k)
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
-  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => adcScan(q))
-      .map(_.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) })
-  }
+  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
+    local.searchBatch(qs, k)
 }
 
-/** In-process SQ8: per-query squared-difference table
-  * ([[graft.index.Sq8Index.sqTable]] — the A8 ADC discipline applied to
-  * SQ8), one byte load + one table add per component, scanned with the
-  * four-row-pipelined canonical fold
-  * ([[graft.index.Sq8Index.tableScanAll]] — per-row values bit-identical
-  * to the inline dequantize scan). Result-identical to
-  * [[Sq8Server.search]]. */
-final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
+/** In-process SQ8 ([[graft.index.Sq8Scan]]: the per-query squared-
+  * difference table, four-row-pipelined canonical fold).
+  * Result-identical to [[Sq8Server.search]]. */
+final class LocalSq8Server(codes: DataFrame, model: Sq8Model) extends LocalServer {
   require(model.metric == Metric.L2,
     s"LocalSq8Server serves the l2 kind; got ${model.metric.name}")
-  private val blocks: Array[ByteBlock] =
-    LocalServe.collect(ServeBlocks.packBytes(codes))
+  private val kernel = new Sq8Scan(model)
+  private val blocks: Array[Block[Byte]] = LocalServe.collect(Layouts.Bytes, codes)
 
-  private def tableScan(q: Array[Double]): (ByteBlock, BoundedTopK) => Unit = {
-    val tab = graft.index.Sq8Index.sqTable(q, model.minsArray, model.scalesArray)
-    (blk, merge) =>
-      graft.index.Sq8Index.tableScanAll(tab, blk.ids, blk.codes, blk.dim, merge)
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(tableScan(q))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
-  }
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] =
+    LocalServe.search(kernel, blocks, q, k)
 
   /** Batch throughput: QUERY-GROUP-BLOCKED row-outer kernel — groups of
     * four queries fan across the common pool (250-way parallel at the
@@ -293,6 +204,7 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
     * instead, with no table at all. */
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
+    qs.foreach(kernel.validate)
     val mins = model.minsArray
     val scales = model.scalesArray
     val nq = qs.length
@@ -306,8 +218,8 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
         var bi = 0
         while (bi < blocks.length) {
           val blk = blocks(bi)
-          val dim = blk.dim
-          val codes = blk.codes
+          val dim = blk.width
+          val codes = blk.data
           val recon = new Array[Double](dim)
           val n = blk.ids.length
           var r = 0
@@ -351,17 +263,10 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
           j += 1
         }
       } else {
-        // tail group (< 4 queries): the single-query table scan, whose
+        // tail group (< G queries): the kernel's table scan, whose
         // per-row values are identical to the interleaved form's
-        var t = q0
-        while (t < nq) {
-          val merge = new BoundedTopK(k)
-          val scan = tableScan(qs(t))
-          var bi = 0
-          while (bi < blocks.length) { scan(blocks(bi), merge); bi += 1 }
-          out(t) = merge.ranked.map { case (id, d, rk) => (id, math.sqrt(d), rk) }
-          t += 1
-        }
+        val tail = LocalServe.searchBatch(kernel, blocks, qs.slice(q0, nq), k)
+        System.arraycopy(tail, 0, out, q0, tail.length)
       }
     }
     out
@@ -369,116 +274,40 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
 }
 
 /** In-process OPQ: driver-side query rotation (one dim² matVec,
-  * microseconds) in front of the PQ scan — same layering as
-  * [[OpqServer]], result-identical to it. */
+  * microseconds) in front of the PQ scan — same kernel as [[OpqServer]],
+  * result-identical to it. */
 final class LocalOpqServer(codes: DataFrame, model: OpqModel) {
-  private val rot = model.rotation.map(_.toArray).toArray
-  private val inner = new LocalPqServer(codes, model.pq)
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] =
-    inner.search(OpqIndex.rotateLocal(rot, q), k)
+  private val local = LocalScan(new OpqScan(model), codes)
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = local.search(q, k)
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
-    inner.searchBatch(qs.map(OpqIndex.rotateLocal(rot, _)), k)
+    local.searchBatch(qs, k)
 }
 
-/** In-process IVFPQ: driver probe ranking + hoisted per-cluster residual
-  * ADC tables + tag-masked code scan. Result-identical to
-  * [[IvfPqServer.search]]. */
+/** In-process IVFPQ: driver probe ranking + residuals, residual ADC over
+  * the probed clusters' ranges. Result-identical to [[IvfPqServer.search]]. */
 final class LocalIvfPqServer(codes: DataFrame, model: IvfPqModel) {
-  private val cents = model.coarse.centroids.map(_.toArray).toArray
-  private val blocks: Array[CodeBlock] =
-    LocalServe.collect(ServeBlocks.packCodes(codes, Some("cluster_id")))
-
-  /** Per-query probe set + hoisted residual ADC tables + masked-scan
-    * closure. */
-  private def residualScan(q: Array[Double], nprobe: Int): (CodeBlock, BoundedTopK) => Unit = {
-    val np = math.min(math.max(nprobe, 1), model.coarse.nlist)
-    val tables = new Array[Array[Double]](model.coarse.nlist)
-    val ksub = model.pq.ksub
-    IvfIndex.probeSet(q, cents, model.coarse.metric, np).foreach { c =>
-      val cent = cents(c)
-      val r = new Array[Double](q.length)
-      var i = 0
-      while (i < q.length) { r(i) = q(i) - cent(i); i += 1 }
-      tables(c) = PqIndex.adcTable(r, model.pq)
-    }
-    (blk, merge) => {
-      val m = blk.m
-      var r = 0
-      while (r < blk.ids.length) {
-        val tab = tables(blk.tags(r).toInt)
-        if (tab != null) {
-          val off = r * m
-          var d = 0.0
-          var mi = 0
-          while (mi < m) { d += tab(mi * ksub + blk.codes(off + mi)); mi += 1 }
-          merge.insert(blk.ids(r), d)
-        }
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(residualScan(q, nprobe))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
-  }
-
+  private val blocks = LocalServe.collect(Layouts.ClusteredCodes, codes)
+  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] =
+    LocalServe.search(new IvfPqScan(model, nprobe), blocks, q, k)
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      nprobe: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => residualScan(q, nprobe))
-      .map(_.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) })
-  }
+      nprobe: Int): Array[Array[(Long, Double, Int)]] =
+    LocalServe.searchBatch(new IvfPqScan(model, nprobe), blocks, qs, k)
 }
 
-/** In-process IVF×SQ8 composite: probe mask over byte-packed codes.
-  * Result-identical to [[IvfSq8Server.search]]. */
+/** In-process IVF×SQ8 composite: the probed clusters' byte-code ranges
+  * through the SQ8 table kernel. Result-identical to [[IvfSq8Server.search]]. */
 final class LocalIvfSq8Server(codes: DataFrame, sq8: Sq8Model, ivf: IvfModel) {
   require(sq8.metric == Metric.L2 && ivf.metric == Metric.L2,
     s"LocalIvfSq8Server serves the l2 kind; got ${sq8.metric.name}/${ivf.metric.name}")
-  private val cents = ivf.centroids.map(_.toArray).toArray
-  private val blocks: Array[ByteBlock] =
-    LocalServe.collect(ServeBlocks.packBytes(codes, Some("cluster_id")))
-
-  /** Per-query probe mask + masked table-scan closure — the same
-    * [[graft.index.Sq8Index.sqTable]] kernel as [[LocalSq8Server]]
-    * (bit-identical terms and fold, so parity with the inline form
-    * holds); the 32k-entry table amortizes as long as the probed rows
-    * exceed ~256 (nprobe·n/nlist at any realistic config). */
-  private def maskedDequantScan(q: Array[Double],
-      nprobe: Int): (ByteBlock, BoundedTopK) => Unit = {
-    val np = math.min(math.max(nprobe, 1), ivf.nlist)
-    val mask = new Array[Boolean](ivf.nlist)
-    IvfIndex.probeSet(q, cents, Metric.L2, np).foreach(mask(_) = true)
-    val tab = graft.index.Sq8Index.sqTable(q, sq8.minsArray, sq8.scalesArray)
-    (blk, merge) => {
-      val dim = blk.dim
-      var r = 0
-      while (r < blk.ids.length) {
-        if (mask(blk.tags(r).toInt))
-          merge.insert(blk.ids(r),
-            graft.index.Sq8Index.tableKey(tab, blk.codes, r * dim, dim))
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(maskedDequantScan(q, nprobe))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
-  }
-
+  private val blocks = LocalServe.collect(Layouts.ClusteredBytes, codes)
+  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] =
+    LocalServe.search(new IvfSq8Scan(sq8, ivf, nprobe), blocks, q, k)
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      nprobe: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => maskedDequantScan(q, nprobe))
-      .map(_.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) })
-  }
+      nprobe: Int): Array[Array[(Long, Double, Int)]] =
+    LocalServe.searchBatch(new IvfSq8Scan(sq8, ivf, nprobe), blocks, qs, k)
 }
 
 /** In-process routed sharded HNSW — the engine's 100 TB ANN shape served
@@ -552,7 +381,7 @@ final class LocalRoutedHnswServer(graph: DataFrame, model: RoutedHnswModel) {
   * floor on exactly the same walks. */
 final class LocalHnswServer private (preGraphs: Array[graft.index.CompiledHnsw],
     graph: DataFrame, metric: Metric, numShards: Int) {
-  import graft.index.{BoundedTopK, CompiledHnsw, HnswIndex}
+  import graft.index.{CompiledHnsw, HnswIndex}
 
   def this(graph: DataFrame, metric: Metric, numShards: Int = -1) =
     this(null, graph, metric, numShards)
@@ -591,17 +420,8 @@ final class LocalHnswServer private (preGraphs: Array[graft.index.CompiledHnsw],
       efSearch: Int = graft.index.HnswIndex.EfSearch): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     val ef = math.max(efSearch, k)
-    val out = new Array[Array[(Long, Double, Int)]](qs.length)
-    java.util.stream.IntStream.range(0, qs.length).parallel().forEach { qi =>
-      val merge = new BoundedTopK(k)
-      var g = 0
-      while (g < graphs.length) {
-        graphs(g).knnInto(qs(qi), k, ef, merge)
-        g += 1
-      }
-      out(qi) = merge.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
-    }
-    out
+    LocalServe.batch(qs, graphs, k)(q => (g, merge) => g.knnInto(q, k, ef, merge))
+      .map(_.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) })
   }
 }
 
@@ -618,38 +438,10 @@ object LocalHnswServer {
   * per row the whole index is megabytes; the scan is the cheapest of any
   * kind. Result-identical to [[BqServer.search]]. */
 final class LocalBqServer(codes: DataFrame, model: BqModel) {
-  private val blocks: Array[WordBlock] =
-    LocalServe.collect(ServeBlocks.packWords(codes))
-
-  /** Per-query sign packing + XOR/popcount scan closure. */
-  private def hammingScan(q: Array[Double]): (WordBlock, BoundedTopK) => Unit = {
-    val qc = BqIndex.packLocal(q, model.thresholdArray)
-    val nw = qc.length
-    (blk, merge) => {
-      require(blk.nWords == nw,
-        s"serving block has ${blk.nWords} words, query packs to $nw")
-      var r = 0
-      while (r < blk.ids.length) {
-        val off = r * nw
-        var d = 0L
-        var w = 0
-        while (w < nw) { d += java.lang.Long.bitCount(blk.words(off + w) ^ qc(w)); w += 1 }
-        merge.insert(blk.ids(r), d.toDouble)
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Long, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(hammingScan(q))
-      .ranked.map { case (id, d, r) => (id, d.toLong, r) }
-  }
-
+  private val local = LocalScan(new BqScan(model), codes)
+  def search(q: Array[Double], k: Int): Array[(Long, Long, Int)] =
+    local.search(q, k).map { case (id, d, r) => (id, d.toLong, r) }
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
-  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Long, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => hammingScan(q))
-      .map(_.ranked.map { case (id, d, r) => (id, d.toLong, r) })
-  }
+  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Long, Int)]] =
+    local.searchBatch(qs, k).map(_.map { case (id, d, r) => (id, d.toLong, r) })
 }

@@ -2,24 +2,19 @@ package graft.query
 
 import org.apache.spark.sql.DataFrame
 
-import graft.index.{OpqIndex, OpqModel}
+import graft.index.{Layouts, OpqModel, OpqScan}
 
 /** OPQ single-query server — the PQ serving kernel behind a driver-side
   * query rotation (one dim² matVec per query, microseconds): the rotated
   * query's ADC table addresses the same packed code blocks PqServer
   * scans, so serving cost and layout are identical to the PQ kind. */
-final class OpqServer(codes: DataFrame, model: OpqModel) {
+// deliberately NOT Serializable — per-query closures capture only locals
+final class OpqServer(codes: DataFrame, model: OpqModel) extends ServingRdd {
 
-  private val rot = model.rotation.map(_.toArray).toArray
-  private val inner = new PqServer(codes, model.pq)
-
-  /** Materialize the serving blocks (call once before timing queries). */
-  def warm(): this.type = { inner.warm(); this }
+  protected val servingRdd = ServeBlocks.pack(Layouts.Codes, codes)
+  private val kernel = new OpqScan(model)
 
   /** One query → top-k (id, distance, rank), driver-merged. */
   def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] =
-    inner.search(OpqIndex.rotateLocal(rot, q), k)
-
-  def floorProbe(): Unit = inner.floorProbe()
-  def unpersist(): Unit = inner.unpersist()
+    ServeBlocks.search(servingRdd, kernel, q, k)
 }

@@ -95,8 +95,6 @@ final class PlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel)
       .localCheckpoint()
   }
 
-  /** Materialize the serving partitions (call once before timing). */
-  def warm(): this.type = { rdd.count(); this }
 
   protected def servingRdd: RDD[_] = rdd
 

@@ -2,7 +2,6 @@ package graft.query
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import graft.core.Metric
 import graft.index.{BoundedTopK, CompiledHnsw, HnswIndex, RoutedHnswIndex, RoutedHnswModel}
@@ -64,8 +63,6 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
       .localCheckpoint()
   }
 
-  /** Materialize the shard graphs (call once before timing queries). */
-  def warm(): this.type = { rdd.count(); this }
 
   /** One query → top-k (id, distance, rank): region probe on the driver,
     * one single-stage job walking only the probed shards' resident
@@ -76,16 +73,9 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
     val mask = new Array[Boolean](model.numShards)
     RoutedHnswIndex.probeShards(q, model, probeRegions).foreach(mask(_) = true)
     val ef = math.max(efSearch, k)
-    val partials = rdd.mapPartitions { it =>
-      val merge = new BoundedTopK(k)
-      it.foreach { case (s, g) =>
-        if (mask(s)) g.knnInto(q, k, ef, merge, distinct = true)
-      }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insertDistinct(id, d) }
-    top.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
+    ServeBlocks.job(rdd, k, distinct = true) { (sg: (Int, CompiledHnsw), merge) =>
+      if (mask(sg._1)) sg._2.knnInto(q, k, ef, merge, distinct = true)
+    }.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
   }
 
   /** Batch kNN over the resident routed graphs — [[RoutedHnswIndex.knn]]
@@ -106,10 +96,7 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
       efSearch: Int = HnswIndex.EfSearch): DataFrame = {
     require(k > 0, s"serving requires k > 0, got $k")
     val spark = graph.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
+    val (qids, qvecs) = graft.index.BlockedScan.collectQueries(queries)
     val probes = qvecs.map(RoutedHnswIndex.probeShards(_, model, probeRegions))
     val inv = graft.index.IvfIndex.invertedProbes(probes, model.numShards)
     val bc = spark.sparkContext.broadcast((qids, qvecs, inv))
@@ -142,16 +129,7 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
     // (query, id), so skipping a duplicate ≡ the old min() dedup), then
     // the (rank_key, id) rank order — identical content to the previous
     // FlatIndex.topK finisher, materialized as a local relation
-    val qPos = new scala.collection.mutable.LongMap[Int](qids.length * 2)
-    qids.zipWithIndex.foreach { case (q, i) => qPos(q) = i }
-    val merged = Array.fill(qids.length)(new BoundedTopK(k))
-    partials.foreach { case (q, id, d) => merged(qPos(q)).insertDistinct(id, d) }
-    val rows = qids.indices.iterator.flatMap { qi =>
-      merged(qi).ranked.iterator.map { case (id, d, r) =>
-        (qids(qi), id, metric.finishRankScalar(d), r)
-      }
-    }.toSeq
-    spark.createDataset(rows).toDF("query_id", "neighbor_id", "distance", "rank")
+    ServeBlocks.mergeBatch(spark, qids, partials, k, metric, distinct = true)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

@@ -92,8 +92,7 @@ final class Searcher private[query] (kind: IndexKind, opts: SearchOptions) {
         .withColumn("distance", col("hamming").cast("double"))
         .select("query_id", "neighbor_id", "distance", "rank")
     case LshKind(planes, indexed, metric) =>
-      LshIndex.knnBlocked(indexed, queries, opts.k, planes, metric,
-        hamming = if (opts.efSearch >= 1) 1 else 0)
+      LshIndex.knnBlocked(indexed, queries, opts.k, planes, metric, hamming = lshRadius)
     case HnswKind(graph, metric, numShards) =>
       HnswIndex.knnBlocked(graph, queries, opts.k, metric, opts.efSearch,
         numShards)
@@ -138,51 +137,44 @@ final class Searcher private[query] (kind: IndexKind, opts: SearchOptions) {
     * the packed state to the driver ONCE at construction; use when the
     * packed index fits one heap (see [[LocalServe]]'s scaladoc for
     * per-kind footprints) — the DataFrame [[search]] stays the cluster
-    * path. Honors this Searcher's nprobe/efSearch; k is per call. Every
-    * kind's local handle is result-identical to its distributed sibling
-    * (LocalServeSpec), with BQ's integer Hamming count reported through
-    * the `distance` slot exactly like the batch facade does. */
+    * path. Honors this Searcher's nprobe/efSearch; k is per call. The
+    * scan kinds serve their [[graft.index.ScanKernel]] through
+    * [[LocalScan]] — the same kernel [[search]] runs — so every kind's
+    * local handle is result-identical to the batch facade and to its
+    * distributed sibling (LocalServeSpec), with BQ's integer Hamming count
+    * reported through the `distance` slot exactly like the batch facade
+    * does. */
   def localServer(): LocalServer = kind match {
     case FlatKind(vectors, metric) =>
-      val s = new LocalFlatServer(vectors, metric)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case IvfKind(model, assigned) =>
-      val s = new LocalIvfServer(assigned, model)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.nprobe),
-        (qs, k) => s.searchBatch(qs, k, opts.nprobe))
-    case PqKind(model, codes) =>
-      val s = new LocalPqServer(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case Sq8Kind(model, codes) =>
-      val s = new LocalSq8Server(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case IvfPqKind(model, codes) =>
-      val s = new LocalIvfPqServer(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.nprobe),
-        (qs, k) => s.searchBatch(qs, k, opts.nprobe))
-    case OpqKind(model, codes) =>
-      val s = new LocalOpqServer(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case BqKind(model, codes) =>
-      val s = new LocalBqServer(codes, model)
-      LocalServerAdapter(
-        (q, k) => s.search(q, k).map { case (id, h, r) => (id, h.toDouble, r) },
-        (qs, k) => s.searchBatch(qs, k)
-          .map(_.map { case (id, h, r) => (id, h.toDouble, r) }))
+      val dim = Layout.width(Layouts.Vectors.rows(vectors))
+      LocalScan(new FlatScan(metric, dim), vectors)
+    case IvfKind(model, assigned) => LocalScan(new IvfScan(model, opts.nprobe), assigned)
+    case PqKind(model, codes) => LocalScan(new PqScan(model), codes)
+    // SQ8's batch path keeps its own query-group kernel
+    case Sq8Kind(model, codes) => new LocalSq8Server(codes, model)
+    case IvfPqKind(model, codes) => LocalScan(new IvfPqScan(model, opts.nprobe), codes)
+    case OpqKind(model, codes) => LocalScan(new OpqScan(model), codes)
+    case BqKind(model, codes) => LocalScan(new BqScan(model), codes)
     case LshKind(planes, indexed, metric) =>
-      val s = new LocalLshServer(indexed, planes, metric)
-      val h = if (opts.efSearch >= 1) 1 else 0
-      LocalServerAdapter((q, k) => s.search(q, k, h),
-        (qs, k) => s.searchBatch(qs, k, h))
+      val dim = Layout.width(Layouts.BucketedVectors.rows(indexed))
+      LocalScan(new LshScan(planes, metric, lshRadius, dim), indexed)
     case HnswKind(graph, metric, numShards) =>
       val s = new LocalHnswServer(graph, metric, numShards)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.efSearch),
-        (qs, k) => s.searchBatch(qs, k, opts.efSearch))
+      new LocalServer {
+        def search(q: Array[Double], k: Int) = s.search(q, k, opts.efSearch)
+        def searchBatch(qs: Array[Array[Double]], k: Int) = s.searchBatch(qs, k, opts.efSearch)
+      }
     case RoutedHnswKind(model, graph) =>
       val s = new LocalRoutedHnswServer(graph, model)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.nprobe, opts.efSearch),
-        (qs, k) => s.searchBatch(qs, k, opts.nprobe, opts.efSearch))
+      new LocalServer {
+        def search(q: Array[Double], k: Int) = s.search(q, k, opts.nprobe, opts.efSearch)
+        def searchBatch(qs: Array[Array[Double]], k: Int) =
+          s.searchBatch(qs, k, opts.nprobe, opts.efSearch)
+      }
   }
+
+  /** LSH probe radius from efSearch: ≥ 1 adds the Hamming-1 buckets. */
+  private def lshRadius: Int = if (opts.efSearch >= 1) 1 else 0
 
   /** Release the cached table a [[Searcher.open]] call pinned. Idempotent;
     * a Searcher built over caller-owned frames (the [[IndexBuilder]] path)
